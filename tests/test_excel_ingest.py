@@ -4,10 +4,6 @@ and input archival."""
 
 from __future__ import annotations
 
-import threading
-
-import pytest
-
 from train_reports_etl_spark.plans.schemas import HEADERS, TRAIN_LIST_HEADER
 from train_reports_etl_spark.sinks.archival import archive_inputs
 from train_reports_etl_spark.sources import xlsx_lite
@@ -16,7 +12,6 @@ from train_reports_etl_spark.sources.report_reader import (
     SheetRef,
     discover_reports,
     read_report,
-    read_sheet_as_strings,
     tier_plan,
 )
 from train_reports_etl_spark.sources.sniffer import SniffResult
@@ -75,17 +70,39 @@ def test_discover_sniff_read_end_to_end(spark, tmp_path):
     assert tickets == ["T0000", "T0001", "T0002"]
 
 
+def _stringified(rows, width):
+    """Rows as the reader must return them: every cell stringified,
+    NULL gaps kept, padded/truncated to the header width."""
+    out = []
+    for row in rows:
+        vals = [None if c is None else str(c) for c in row[:width]]
+        out.append(tuple(vals + [None] * (width - len(vals))))
+    return sorted(out, key=repr)
+
+
+def _collected(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def _n_tiers(spark, first_row, last_row, min_rows):
+    parallelism = spark.sparkContext.defaultParallelism
+    return len(tier_plan(first_row, last_row, min_rows, max_workers=parallelism))
+
+
 def test_read_sheet_tiered_matches_sequential(spark, tmp_path):
     # enough rows that tier_plan(min_rows_per_task=10) makes >1 tier
-    rows = [["junk"], list(TRAIN_LIST_HEADER)] + [
-        [f"v{i}"] + [""] * (len(TRAIN_LIST_HEADER) - 1) for i in range(50)
-    ]
-    path = xlsx_lite.write_xlsx(str(tmp_path / "big.xlsx"), {"TL": rows})
-    ref = SheetRef(path, "TL", SniffResult("train_list", 1))
-    df = read_sheet_as_strings(spark, ref, max_workers=4)
-    vals = sorted(r[0] for r in df.select("Departure Date").collect())
-    assert vals == sorted(f"v{i}" for i in range(50))
-    assert df.count() == 50
+    width = len(TRAIN_LIST_HEADER)
+    data = [[f"v{i}", i, None] + [""] * (width - 3) for i in range(50)]
+    path = xlsx_lite.write_xlsx(
+        str(tmp_path / "big.xlsx"), {"TL": [["junk"], list(TRAIN_LIST_HEADER)] + data}
+    )
+    ref = SheetRef(path, "TL", SniffResult("train_list", 1, tuple(TRAIN_LIST_HEADER)))
+    df = read_report(spark, [ref], min_rows_per_task=10)
+    assert df.columns == list(TRAIN_LIST_HEADER)
+    assert _collected(df) == _stringified(data, width)
+    # one RDD partition per row tier
+    n_tiers = _n_tiers(spark, 3, 52, 10)
+    assert n_tiers > 1 and df.rdd.getNumPartitions() == n_tiers
 
 
 def test_tier_plan_reference_constants():
@@ -103,66 +120,62 @@ def test_tier_plan_reference_constants():
     assert tier_plan(5, 4) == []
 
 
-def test_read_report_reads_sheets_concurrently(spark):
-    """S4 probe: two reader calls must be in flight at once — a
-    2-party barrier deadlocks (and times out) under sequential reads."""
-    barrier = threading.Barrier(2, timeout=10)
+def test_read_report_reads_sheets_concurrently(spark, tmp_path):
+    """S4 probe: same-header sheets are tasks of ONE RDD — one scan, one
+    partition per sheet tier — so Spark runs them as concurrent tasks of
+    one stage instead of one job per sheet."""
+    header = ["s", "v"]
+    path = xlsx_lite.write_xlsx(
+        str(tmp_path / "two.xlsx"),
+        {"a": [header, ["a", 1], ["a", 2]], "b": [header, ["b", 3]]},
+    )
+    refs = [SheetRef(path, s, SniffResult("t", 0, tuple(header))) for s in ("a", "b")]
+    out = read_report(spark, refs)
+    assert _collected(out) == [("a", "1"), ("a", "2"), ("b", "3")]
+    assert out.rdd.getNumPartitions() == 2
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("LogicalRDD") == 1 and "Union" not in plan
 
-    def reader(ref):
-        barrier.wait()
-        return spark.createDataFrame([(ref.sheet,)], ["s"])
 
-    refs = [SheetRef("f", s, SniffResult("train_list", 0)) for s in ("a", "b")]
-    out = read_report(spark, refs, reader=reader)
-    assert sorted(r.s for r in out.collect()) == ["a", "b"]
-
-
-def test_distributed_read_matches_driver_path(spark, tmp_path):
-    """S4 executor path: `read_report_distributed` (tiers as RDD tasks
-    via parallelize().flatMap) must produce the IDENTICAL frame as the
-    driver-thread path on a multi-file, multi-sheet fixture with mixed
-    headers, NULL gaps, and enough rows for multiple tiers per sheet."""
-    from train_reports_etl_spark.sources.report_reader import read_report_distributed
-
+def test_distributed_read_matches_fixture_rows(spark, tmp_path):
+    """S4 executor path: every (file, sheet, row-tier) is one RDD task
+    (parallelize().flatMap); on a multi-file, multi-sheet fixture with
+    NULL gaps and several tiers per sheet, the frame holds exactly the
+    rows the fixture wrote, stringified."""
     width = len(TRAIN_LIST_HEADER)
 
-    def sheet_rows(tag, n):
+    def data_rows(tag, n):
         data = []
         for i in range(n):
-            row = [f"{tag}{i}"] + [""] * (width - 1)
+            row = [f"{tag}{i}", i] + [""] * (width - 2)
             row[2] = None  # NULL gap must survive the round trip
             data.append(row)
-        return [["junk title"], list(TRAIN_LIST_HEADER)] + data
+        return data
 
-    p1 = xlsx_lite.write_xlsx(
-        str(tmp_path / "a.xlsx"), {"S1": sheet_rows("a", 40), "S2": sheet_rows("b", 25)}
-    )
-    p2 = xlsx_lite.write_xlsx(str(tmp_path / "b.xlsx"), {"S1": sheet_rows("c", 10)})
-    refs = [
-        SheetRef(p1, "S1", SniffResult("train_list", 1)),
-        SheetRef(p1, "S2", SniffResult("train_list", 1)),
-        SheetRef(p2, "S1", SniffResult("train_list", 1)),
-    ]
+    files = {
+        "a.xlsx": {"S1": data_rows("a", 40), "S2": data_rows("b", 25)},
+        "b.xlsx": {"S1": data_rows("c", 10)},
+    }
+    for name, sheets in files.items():
+        xlsx_lite.write_xlsx(
+            str(tmp_path / name),
+            {s: [["junk title"], list(TRAIN_LIST_HEADER)] + rows for s, rows in sheets.items()},
+        )
+    written = [rows for sheets in files.values() for rows in sheets.values()]
+    refs = discover_reports(str(tmp_path))["train_list"]
+    assert len(refs) == 3
     # small min_rows_per_task so every sheet splits into several tiers
-    dist = read_report_distributed(spark, refs, min_rows_per_task=8)
-    drv = read_report(spark, refs, distributed=False)
-    assert dist.columns == drv.columns == list(TRAIN_LIST_HEADER)
-    assert dist.count() == 75
-    assert dist.exceptAll(drv).count() == 0
-    assert drv.exceptAll(dist).count() == 0
+    df = read_report(spark, refs, min_rows_per_task=8)
+    assert df.columns == list(TRAIN_LIST_HEADER)
+    assert _collected(df) == _stringified([r for rows in written for r in rows], width)
     # the executor path really fans out: one RDD partition per tier
-    assert dist.rdd.getNumPartitions() >= 6
-
-    # auto dispatch: multi-sheet refs take the executor path and agree
-    auto = read_report(spark, refs)
-    assert auto.exceptAll(drv).count() == 0 and auto.count() == 75
+    n_tiers = sum(_n_tiers(spark, 3, len(rows) + 2, 8) for rows in written)
+    assert n_tiers >= 3 and df.rdd.getNumPartitions() == n_tiers
 
 
 def test_distributed_read_mixed_headers_union_by_name(spark, tmp_path):
     """Sheets with different sniffed headers group into separate RDD
-    jobs and union by name, matching the driver path's semantics."""
-    from train_reports_etl_spark.sources.report_reader import read_report_distributed
-
+    jobs and union by name."""
     h1 = ["x", "y"]
     h2 = ["y", "x"]  # same names, different order → by-name union
     p = xlsx_lite.write_xlsx(
@@ -173,16 +186,62 @@ def test_distributed_read_mixed_headers_union_by_name(spark, tmp_path):
         },
     )
     refs = [
-        SheetRef(p, "A", SniffResult("t", 0)),
-        SheetRef(p, "B", SniffResult("t", 0)),
+        SheetRef(p, "A", SniffResult("t", 0, tuple(h1))),
+        SheetRef(p, "B", SniffResult("t", 0, tuple(h2))),
     ]
-    dist = read_report_distributed(spark, refs, min_rows_per_task=2)
-    drv = read_report(spark, refs, distributed=False)
+    dist = read_report(spark, refs, min_rows_per_task=2)
     assert sorted(dist.columns) == ["x", "y"]
-    assert dist.exceptAll(drv).count() == 0
-    assert drv.exceptAll(dist).count() == 0
-    rows = {(r["x"], r["y"]) for r in dist.collect()}
-    assert ("bx2", "by2") in rows and ("ax0", "ay0") in rows
+    rows = sorted((r["x"], r["y"]) for r in dist.collect())
+    assert rows == sorted([(f"ax{i}", f"ay{i}") for i in range(5)]
+                          + [(f"bx{i}", f"by{i}") for i in range(4)])
+    assert dist.rdd.getNumPartitions() == _n_tiers(spark, 2, 6, 2) + _n_tiers(spark, 2, 5, 2)
+
+
+def test_header_only_sheet_reads_as_empty_frame(spark, tmp_path):
+    header = list(HEADERS["occupancy_list_hist"])
+    xlsx_lite.write_xlsx(str(tmp_path / "occ.xlsx"), {"O": [["title"], header]})
+    refs = discover_reports(str(tmp_path))["occupancy_list_hist"]
+    df = read_report(spark, refs)
+    assert df.columns == header
+    assert df.count() == 0
+
+
+def test_null_header_cell_reads_as_unnamed_column(spark, tmp_path):
+    """A NULL header cell still sniffs (the match drops NULLs) and its
+    column is named ``Unnamed: i`` after its position."""
+    header = list(TRAIN_LIST_HEADER[:3]) + [None] + list(TRAIN_LIST_HEADER[3:])
+    data = [[f"d{i}", "x", "y", f"gap{i}"] for i in range(3)]
+    xlsx_lite.write_xlsx(str(tmp_path / "tl.xlsx"), {"TL": [header] + data})
+    [ref] = discover_reports(str(tmp_path))["train_list"]
+    df = read_report(spark, [ref])
+    assert df.columns == list(TRAIN_LIST_HEADER[:3]) + ["Unnamed: 3"] + list(TRAIN_LIST_HEADER[3:])
+    assert sorted(r["Unnamed: 3"] for r in df.collect()) == ["gap0", "gap1", "gap2"]
+
+
+def test_header_names_match_the_sniff_not_the_raw_cells(spark, tmp_path):
+    """The sniff strips header cells before matching, so the columns are
+    named from the stripped cells too: a sheet whose header says
+    ``"Ticket Number "`` reads into the same frame and column as a clean
+    one."""
+    width = len(TRAIN_LIST_HEADER)
+    padded = [c + " " if c == "Ticket Number" else c for c in TRAIN_LIST_HEADER]
+    ticket = TRAIN_LIST_HEADER.index("Ticket Number")
+
+    def rows(header, tag):
+        data = [[""] * width for _ in range(2)]
+        for i, row in enumerate(data):
+            row[ticket] = f"{tag}{i}"
+        return [header] + data
+
+    xlsx_lite.write_xlsx(
+        str(tmp_path / "tl.xlsx"),
+        {"clean": rows(list(TRAIN_LIST_HEADER), "c"), "padded": rows(padded, "p")},
+    )
+    refs = discover_reports(str(tmp_path))["train_list"]
+    assert len(refs) == 2
+    df = read_report(spark, refs)
+    assert df.columns == list(TRAIN_LIST_HEADER)
+    assert sorted(r["Ticket Number"] for r in df.collect()) == ["c0", "c1", "p0", "p1"]
 
 
 def test_archive_inputs_moves_and_overwrites(tmp_path):

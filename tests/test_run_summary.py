@@ -105,3 +105,47 @@ def test_bad_directory_is_one_event(spark):
     summary = run_reports(spark, "/nonexistent/dir", pipelines={})
     assert summary.errors_found
     assert summary.events[0].stage == "read"
+
+
+def test_run_reports_sniffs_each_sheet_once(spark, tmp_path, monkeypatch):
+    """Workbook opens on the driver: one sheet listing per file, one
+    header probe per sheet (the sniff, whose header is reused for the
+    read) and one size probe per sniffed sheet. Data rows are read on
+    executors, in other processes, so they do not count here."""
+    from collections import Counter
+
+    from train_reports_etl_spark.plans.report_pipelines import ReportResult
+    from train_reports_etl_spark.sources import report_reader
+
+    xlsx_lite.write_xlsx(
+        str(tmp_path / "a.xlsx"),
+        {"TL1": _tl_rows(2), "TL2": _tl_rows(3), "notes": [["not a report"]]},
+    )
+    xlsx_lite.write_xlsx(str(tmp_path / "b.xlsx"), {"TL": _tl_rows(1)})
+
+    calls = Counter()
+
+    def counting(name):
+        fn = getattr(report_reader, name)
+
+        def wrapped(*args, **kwargs):
+            calls[name] += 1
+            return fn(*args, **kwargs)
+
+        return wrapped
+
+    for name in ("_sheet_names", "_engine_rows", "_sheet_max_row"):
+        monkeypatch.setattr(report_reader, name, counting(name))
+
+    rows = []
+
+    def counting_pipeline(raw):
+        rows.append(raw.count())
+        empty = raw.limit(0)
+        return ReportResult(cleaned=raw, error_rows=empty, duplicates=empty)
+
+    summary = run_reports(spark, str(tmp_path), pipelines={"train_list": counting_pipeline})
+    assert not summary.errors_found
+    assert rows == [6]
+    assert sum(e.stage == "read" for e in summary.events) == 3
+    assert calls == {"_sheet_names": 2, "_engine_rows": 4, "_sheet_max_row": 3}

@@ -25,6 +25,11 @@ PROBE_DEPTH = 50  # `reports_exporter_v0.83.py:432`
 class SniffResult:
     report_type: str
     header_row: int  # 0-based index of the header row within the probe
+    columns: tuple[str, ...]  # frame column names, from :func:`column_names`
+
+
+def _is_null(cell) -> bool:
+    return cell is None or (isinstance(cell, float) and cell != cell)  # NaN
 
 
 def _normalize(cells: list) -> list[str]:
@@ -32,14 +37,14 @@ def _normalize(cells: list) -> list[str]:
     the reference's row comparison (`reports_exporter_v0.83.py:441-452`).
     `dropna()` keeps empty strings, so a blank-string header cell makes
     the row NOT match (same as the reference) — only None/NaN drop."""
-    out = []
-    for c in cells:
-        if c is None:
-            continue
-        if isinstance(c, float) and c != c:  # NaN
-            continue
-        out.append(str(c).strip())
-    return out
+    return [str(c).strip() for c in cells if not _is_null(c)]
+
+
+def column_names(cells: list) -> tuple[str, ...]:
+    """Column names for a matched header row: the same stripped text the
+    match compared, and ``Unnamed: i`` for a null cell at position ``i``
+    (pandas' name for a header gap), so every cell keeps its column."""
+    return tuple(f"Unnamed: {i}" if _is_null(c) else str(c).strip() for i, c in enumerate(cells))
 
 
 def sniff_rows(rows: list[list], headers: dict[str, list[str]] | None = None) -> SniffResult | None:
@@ -56,5 +61,5 @@ def sniff_rows(rows: list[list], headers: dict[str, list[str]] | None = None) ->
             continue
         for report_type, expected in headers.items():
             if got == list(expected):
-                return SniffResult(report_type=report_type, header_row=i)
+                return SniffResult(report_type=report_type, header_row=i, columns=column_names(row))
     return None
